@@ -9,18 +9,15 @@ seed always gives byte-identical tables.
 
 Each (seed, sf, k, tables) corpus is written once under
 ``.perfbench_cache/corpus/`` at the checkout root (git-ignored) and
-reused by later runs.
-
-    python3 perfbench/corpus.py --seed 1 --sf 0.01 --k 10 --tables orders
+reused by later runs.  ``run.py`` calls ``build`` with each workload's
+fixed scale and tables.
 """
 
 from __future__ import annotations
 
-import argparse
 import importlib.util
 import os
 import shutil
-import time
 
 import numpy as np
 import pyarrow as pa
@@ -222,18 +219,3 @@ def build(seed: int, sf: float, k: int, tables=ALL_TABLES) -> str:
     open(os.path.join(out, "_DONE"), "w").close()
     return out
 
-
-def main() -> None:
-    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("--seed", type=int, required=True)
-    ap.add_argument("--sf", type=float, default=0.01)
-    ap.add_argument("--k", type=int, default=1)
-    ap.add_argument("--tables", default=",".join(ALL_TABLES))
-    args = ap.parse_args()
-    t0 = time.perf_counter()
-    path = build(args.seed, args.sf, args.k, tuple(args.tables.split(",")))
-    print(f"{path} ({time.perf_counter() - t0:.2f} s)")
-
-
-if __name__ == "__main__":
-    main()

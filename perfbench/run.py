@@ -18,6 +18,7 @@ import time
 T_START = time.perf_counter()
 
 import argparse  # noqa: E402
+import contextlib  # noqa: E402
 import hashlib  # noqa: E402
 import json  # noqa: E402
 import os  # noqa: E402
@@ -78,13 +79,33 @@ def loadavg() -> list[float]:
 
 
 class Ctx:
-    """What a workload needs: the session, its corpus and the harvester."""
+    """What a workload needs: the session, its corpus, the harvester, the
+    process-tree CPU clocks and the gate timer."""
 
-    def __init__(self, spark, corpus, seed, harvester):
+    def __init__(self, spark, corpus, seed, harvester, tree_cpu_s, jit_cpu_s):
         self.spark, self.corpus, self.seed = spark, corpus, seed
         self.harvester = harvester
         self.cache = CACHE
-        self.gate_s = 0.0
+        self._tree_cpu_s, self._jit_cpu_s = tree_cpu_s, jit_cpu_s
+        self.gate_s = self.gate_cpu_s = 0.0
+
+    def cpu(self) -> float:
+        """CPU seconds used so far by this process, the JVM and its workers."""
+        return self._tree_cpu_s(os.getpid())
+
+    def job_cpu(self) -> float:
+        """``cpu()`` without the JVM's JIT compiler threads."""
+        return self.cpu() - self._jit_cpu_s()
+
+    @contextlib.contextmanager
+    def gate(self):
+        """Time the oracle gate, wall and CPU, to keep it out of set-up."""
+        w0, c0 = time.perf_counter(), self.cpu()
+        try:
+            yield
+        finally:
+            self.gate_s += time.perf_counter() - w0
+            self.gate_cpu_s += self.cpu() - c0
 
 
 def stop_spark(spark, pids: list[int]) -> None:
@@ -125,7 +146,9 @@ def main(argv=None) -> int:
         from trading212_etl_spark.session import get_session
         import tests.oracle_harness  # noqa: F401  (the output gate)
         from perfbench import corpus
-        from perfbench.status import COUNTERS, Harvester, RssSampler, process_tree
+        from perfbench.status import (
+            COUNTERS, Harvester, JitCpu, RssSampler, process_tree, tree_cpu_s,
+        )
         from perfbench.workloads import WORKLOADS
     except ImportError as e:
         print(f"perfbench: the engine is not importable from {ROOT}: {e}", file=sys.stderr)
@@ -145,24 +168,28 @@ def main(argv=None) -> int:
     os.environ.setdefault("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     load_before = loadavg()
 
-    t0 = time.perf_counter()
+    t0, c0 = time.perf_counter(), tree_cpu_s(os.getpid())
     corpus_dir = args.src or corpus.build(args.seed, W.sf, W.k, W.tables or corpus.ALL_TABLES)
     gen_s = time.perf_counter() - t0
+    gen_cpu_s = tree_cpu_s(os.getpid()) - c0
 
     t0 = time.perf_counter()
     spark = get_session()
     session_s = time.perf_counter() - t0
     harvester = Harvester(spark)
     jvm_pid = harvester.jvm_pid()
-    ctx = Ctx(spark, corpus_dir, args.seed, harvester)
+    ctx = Ctx(spark, corpus_dir, args.seed, harvester, tree_cpu_s, JitCpu(jvm_pid))
     work = W(ctx)
 
-    with RssSampler(jvm_pid) as rss:
+    # memory is a traced metric; untraced runs skip the sampler, whose
+    # reads of the JVM's page tables would add to the measured CPU
+    with RssSampler(jvm_pid) if args.trace else contextlib.nullcontext() as rss:
         t0 = time.perf_counter()
         warm_walls, gate_errors = work.warmup()
         warmup_s = time.perf_counter() - t0 - ctx.gate_s
-        setup_s = time.perf_counter() - T_START - gen_s - ctx.gate_s
-        warm_peak_mb = rss.peak_mb
+        setup_wall_s = time.perf_counter() - T_START - gen_s - ctx.gate_s
+        setup_cpu_s = ctx.cpu() - gen_cpu_s - ctx.gate_cpu_s
+        warm_peak_mb = rss.peak_mb if rss else None
 
         iterations, traced = [], []
         t_meas = time.perf_counter()
@@ -189,9 +216,14 @@ def main(argv=None) -> int:
     correct = not gate_errors and failed == 0 and bool(ok)
     walls = [sum(r["wall"] for r in it) for it in ok] or [float("nan")]
     cpus = [sum(r["executor_cpu_s"] for r in it) for it in ok] or [float("nan")]
+    proc_cpus = [sum(r["proc_cpu_s"] for r in it) for it in ok] or [float("nan")]
 
     if args.trace == 0:
-        values = {"setup_s": setup_s, "cpu_s_per_job": statistics.median(cpus)}
+        values = {
+            "setup_s": setup_cpu_s,
+            "cpu_s_per_job": statistics.median(cpus),
+            "proc_cpu_s_per_job": statistics.median(proc_cpus),
+        }
         wanted = bench["end_to_end"]
     else:
         # per iteration: engine counters summed over the untraced jobs
@@ -201,6 +233,7 @@ def main(argv=None) -> int:
         values.update({k: statistics.median(t.get(k, 0.0) for t in traced) for k in keys})
         values["session.get_session_s"] = session_s
         values["session.warmup_s"] = warmup_s
+        values["session.setup_wall_s"] = setup_wall_s
         values["memory.peak_rss_mb"] = rss.peak_mb
         values["memory.jvm_peak_rss_mb"] = rss.jvm_peak_mb
         values["trace.untraced_job_s"] = statistics.median(walls)
@@ -221,13 +254,19 @@ def main(argv=None) -> int:
         "spark": spark_version, "java": java_version, "driver_memory": driver_mem,
         "git_sha": git_sha(), "source_sha": source_sha(), "corpus": corpus_dir,
         "corpus_gen_s": round(gen_s, 3), "gate_s": round(ctx.gate_s, 3),
+        "gate_cpu_s": round(ctx.gate_cpu_s, 3),
+        "setup_wall_s": round(setup_wall_s, 3), "setup_cpu_s": round(setup_cpu_s, 3),
         "warmup_walls_s": [round(w, 3) for w in warm_walls],
         "iterations": len(iterations), "operations": len(records),
-        "warmup_peak_rss_mb": round(warm_peak_mb, 1),
-        "peak_rss_mb": round(rss.peak_mb, 1),
+        "warmup_peak_rss_mb": warm_peak_mb and round(warm_peak_mb, 1),
+        "peak_rss_mb": rss and round(rss.peak_mb, 1),
         "job_walls_s": [round(w, 3) for w in walls],
+        "job_proc_cpu_s": [round(c, 3) for c in proc_cpus],
         "measured_s": round(measured_s, 3),
-        "operation_walls_s": [[r["name"], round(r.get("wall", -1.0), 3)] for r in records],
+        "operation_wall_cpu_s": [
+            [r["name"], round(r.get("wall", -1.0), 3), round(r.get("proc_cpu_s", -1.0), 2)]
+            for r in records
+        ],
     }
     print("env", json.dumps(env))
     for e in gate_errors + [f"{r['name']}: {r['error']}" for r in records if "error" in r]:

@@ -46,7 +46,7 @@ LAYERS_USED = {
     ),
 }
 ALWAYS_USED = (
-    "session.get_session_s", "session.warmup_s", "memory.peak_rss_mb",
+    "session.get_session_s", "session.warmup_s", "session.setup_wall_s", "memory.peak_rss_mb",
     "spark.executor_cpu_s", "spark.executor_run_s", "spark.jobs",
     "spark.stages", "spark.tasks", "trace.steps_s", "trace.untraced_job_s",
 )

@@ -1,4 +1,4 @@
-"""Spark status-store harvest and process-memory sampling.
+"""Spark status-store harvest, process-tree CPU and memory sampling.
 
 Every timed call runs under its own job group; ``Harvester.take(group)``
 sums the stage metrics of that group's jobs straight from the
@@ -19,6 +19,7 @@ COUNTERS = (
     "jobs", "stages", "tasks",
 )
 MB = 1 << 20
+CLK_TCK = os.sysconf("SC_CLK_TCK")
 
 
 class Harvester:
@@ -97,6 +98,67 @@ def process_tree(root: int) -> list[int]:
         out.append(p)
         todo.extend(children.get(p, []))
     return out
+
+
+# HotSpot's JIT threads (names as /proc shows them, cut to 15 characters)
+JIT_THREADS = ("C1 CompilerThre", "C2 CompilerThre", "Sweeper thread")
+
+
+def _ticks(stat_path: str, n: int) -> int:
+    """utime + stime (n=2), plus cutime + cstime (n=4), of one /proc stat."""
+    with open(stat_path) as f:
+        fields = f.read().rsplit(")", 1)[1].split()
+    return sum(int(x) for x in fields[11:11 + n])
+
+
+def tree_cpu_s(root: int) -> float:
+    """CPU seconds (user plus system) used so far by ``root`` and its live
+    descendants, with the children each has reaped: rooted at the
+    benchmark's own process, that is the Python driver, the JVM and the
+    JVM's Python workers."""
+    ticks = 0
+    for pid in process_tree(root):
+        try:
+            ticks += _ticks(f"/proc/{pid}/stat", 4)
+        except OSError:
+            continue  # exited since the scan; its parent has reaped it
+    return ticks / CLK_TCK
+
+
+class JitCpu:
+    """CPU seconds used so far by the JVM's JIT compiler threads.
+
+    Compilation decays over the first rounds of a workload and then comes
+    in bursts, so it is kept out of the per-job CPU.  HotSpot starts and
+    stops compiler threads on demand: a thread that has exited keeps the
+    CPU it was last seen with."""
+
+    def __init__(self, jvm_pid: int):
+        self.task = f"/proc/{jvm_pid}/task"
+        self._is_jit: dict[str, bool] = {}
+        self._seen: dict[str, int] = {}
+
+    def __call__(self) -> float:
+        try:
+            tids = os.listdir(self.task)
+        except OSError:
+            tids = []
+        for tid in tids:
+            if tid not in self._is_jit:
+                try:
+                    with open(f"{self.task}/{tid}/comm") as f:
+                        comm = f.read().strip()
+                except OSError:
+                    continue
+                if comm == "java":
+                    continue  # not named yet
+                self._is_jit[tid] = comm.startswith(JIT_THREADS)
+            if self._is_jit[tid]:
+                try:
+                    self._seen[tid] = _ticks(f"{self.task}/{tid}/stat", 2)
+                except OSError:
+                    pass
+        return sum(self._seen.values()) / CLK_TCK
 
 
 def _pss_mb(pid: int) -> float:

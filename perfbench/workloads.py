@@ -4,16 +4,17 @@ A workload names its corpus (``tables``, base scale ``sf``, replication
 ``k``) and exposes to ``run.py``:
 
 - ``warmup()``: the warm-up jobs, including the once-per-run oracle
-  gate, whose time is reported apart from set-up; returns the warm-up
-  walls and the gate's errors;
+  gate, run under ``ctx.gate()`` so that its time is kept apart from
+  set-up; returns the warm-up walls and the gate's errors;
 - ``iteration()``: one untraced job, as the records of its operations;
 - ``traced_iteration()``: the same work split into materialized layer
   steps, returning per-layer values.
 
-A record is ``{"name", "wall", **counters}`` with the status-store
-counters of ``status.COUNTERS`` (registry entries add ``build``,
-``build_jobs`` and ``output``), or ``{"name", "error"}`` when the call
-raised.
+A record is ``{"name", "wall", "proc_cpu_s", **counters}``: the wall,
+the CPU of the process tree without JIT threads (``Ctx.job_cpu``) and
+the status-store counters of ``status.COUNTERS`` (registry entries add
+``build``, ``build_jobs`` and ``output``), or ``{"name", "error"}`` when
+the call raised.
 """
 
 from __future__ import annotations
@@ -64,31 +65,36 @@ def dir_bytes(path: str) -> tuple[int, int]:
 
 
 class Step:
-    """Time one call under its own job group and harvest its counters."""
+    """Time one call under its own job group and harvest its counters
+    (after reading the clocks, so the harvest is not timed)."""
 
     def __init__(self, ctx, label: str):
         self.ctx, self.label = ctx, label
 
     def __enter__(self):
         self.group = self.ctx.harvester.group(self.label)
+        self.cpu0 = self.ctx.job_cpu()
         self.t0 = time.perf_counter()
         return self
 
     def __exit__(self, *exc):
         self.wall = time.perf_counter() - self.t0
+        self.cpu = self.ctx.job_cpu() - self.cpu0
         self.stats = self.ctx.harvester.take(self.group)
 
 
 class Collected:
-    """A collected query output in the shape ``oracle_harness.compare``
-    reads: the Spark schema plus ``toPandas()``."""
+    """A sink for the gated round: the output is cached and materialized
+    through the noop sink, like a measured job; ``oracle_harness.compare``
+    later collects it from the cache (``toPandas``) under gate time."""
 
     def __init__(self, df):
         self.schema = df.schema
-        self._pdf = df.toPandas()
+        self.df = df.persist()
+        noop(self.df)
 
     def toPandas(self):
-        return self._pdf
+        return self.df.toPandas()
 
 
 def _oracle(con, sql: str):
@@ -128,7 +134,7 @@ class EtlSink:
     name = "etl_sink"
     tables = ("orders",)
     sf, k = 0.01, 5
-    warmup_jobs = 4
+    warmup_jobs = 10
 
     def __init__(self, ctx):
         self.ctx = ctx
@@ -142,16 +148,15 @@ class EtlSink:
         ctx = self.ctx
         with Step(ctx, "etl") as s:
             write_parquet(flagship_pipeline(load_table(ctx.spark, ctx.corpus, "orders")), self.out)
-        return {"name": "flagship_pipeline", "wall": s.wall, **s.stats}
+        return {"name": "flagship_pipeline", "wall": s.wall, "proc_cpu_s": s.cpu, **s.stats}
 
     def warmup(self):
         walls, errors = [], []
         for i in range(self.warmup_jobs):
             walls.append(self._job()["wall"])
             if i == 0:
-                t0 = time.perf_counter()
-                errors = self.gate()
-                self.ctx.gate_s += time.perf_counter() - t0
+                with self.ctx.gate():
+                    errors = self.gate()
         return walls, errors
 
     def gate(self) -> list[str]:
@@ -182,7 +187,8 @@ class EtlSink:
         with Step(ctx, "canonicalize") as s:
             canon = orders.select(canonicalize_actions("o_orderpriority")).persist()
             noop(canon)
-        steps.append(s)
+        # layer detail only: the flagship step below runs this function
+        # again, so it stays out of trace.steps_s
         v["functions.canonicalize_s"] = s.wall
         with Step(ctx, "flagship") as s:
             out = flagship_pipeline(orders).persist()
@@ -227,33 +233,37 @@ class AnalyticsMix:
 
         ctx = self.ctx
         group = ctx.harvester.group(f"{name}:build")
+        cpu0 = ctx.job_cpu()
         t0 = time.perf_counter()
         df = QUERIES[name](ctx.spark, ctx.corpus)
         build = time.perf_counter() - t0
+        build_cpu = ctx.job_cpu() - cpu0
         build_jobs = len(ctx.harvester.jobs(group))
         build_stats = ctx.harvester.take(group)
         with Step(ctx, f"{name}:exec") as s:
             output = sink(df)
         stats = {c: build_stats[c] + s.stats[c] for c in COUNTERS}
-        return {"name": name, "wall": build + s.wall, "build": build,
-                "build_jobs": build_jobs, "output": output, **stats}
+        return {"name": name, "wall": build + s.wall, "proc_cpu_s": build_cpu + s.cpu,
+                "build": build, "build_jobs": build_jobs, "output": output, **stats}
 
     def warmup(self):
-        """The cold round collects every output and checks it against its
-        oracle; only the DuckDB and comparison time counts as gate time."""
-        con = _duck(self.ctx.corpus)
+        """The cold round caches every output; collecting it and checking
+        it against its oracle is gate time."""
         t0, errors = time.perf_counter(), []
-        try:
-            for r in self.iteration(sink=Collected):
-                if "error" in r:
-                    errors.append(f"{r['name']}: {r['error']}")
-                    continue
-                g0 = time.perf_counter()
-                errors += _gate(r["name"], r["output"], con)
-                self.ctx.gate_s += time.perf_counter() - g0
-        finally:
-            con.close()
-        return [time.perf_counter() - t0 - self.ctx.gate_s], errors
+        records = self.iteration(sink=Collected)
+        walls = [time.perf_counter() - t0]
+        with self.ctx.gate():
+            con = _duck(self.ctx.corpus)
+            try:
+                for r in records:
+                    if "error" in r:
+                        errors.append(f"{r['name']}: {r['error']}")
+                        continue
+                    errors += _gate(r["name"], r["output"], con)
+                    r["output"].df.unpersist()
+            finally:
+                con.close()
+        return walls, errors
 
     def iteration(self, sink=noop):
         return [attempt(n, lambda n=n: self._query(n, sink)) for n in self._order()]
