@@ -2,7 +2,8 @@
 schema-stable, zero-row (or well-defined) result on an empty frame —
 at 100 TB, empty partitions, empty date ranges, and freshly-truncated
 tables hit every operator eventually, and an operator that throws on
-empty input fails the whole job."""
+empty input fails the whole job. Oversized inputs must fail loudly
+rather than OOM a task."""
 
 from __future__ import annotations
 
@@ -170,3 +171,22 @@ def test_registry_event_entries_on_empty_events_parquet(spark, tmp_path):
         df = registry.QUERIES[name](spark, sf_dir)
         assert df.count() == 0, name
         assert len(df.schema.fields) >= 2, name
+
+
+def test_basket_affinity_oversized_basket_fails_loudly(spark, tmp_path):
+    """One order with more parts than the basket cap must raise a
+    named error instead of building its C(n, 2) pair array inside one
+    row (a task OOM at scale)."""
+    import pytest
+
+    from trading212_etl_spark import registry
+    from trading212_etl_spark.registry.timeseries import _BASKET_MAX_PARTS
+
+    sf_dir = str(tmp_path)
+    rows = [(1, p) for p in range(_BASKET_MAX_PARTS + 1)] + [(2, 1), (2, 2)]
+    spark.createDataFrame(rows, "l_orderkey long, l_partkey long").write.parquet(
+        f"{sf_dir}/lineitem.parquet"
+    )
+    df = registry.QUERIES["orders_basket_affinity"](spark, sf_dir)
+    with pytest.raises(Exception, match=f"order 1 has {_BASKET_MAX_PARTS + 1} parts"):
+        df.collect()

@@ -23,9 +23,7 @@ def all_oracle_names():
     return sorted(registry.ORACLES)
 
 
-@pytest.mark.parametrize("name", all_oracle_names())
-def test_oracle_parity(name, spark, oracle_con):
-    spark_df = registry.QUERIES[name](spark, SF_CORRECTNESS)
+def _assert_matches_oracle(name, spark_df, oracle_con):
     rel = oracle_con.sql(registry.ORACLES[name])
     oracle_types = list(zip(rel.columns, rel.types))
     res = oracle_con.execute(registry.ORACLES[name])
@@ -39,6 +37,38 @@ def test_oracle_parity(name, spark, oracle_con):
         oracle_types=oracle_types,
     )
     assert not errs, "\n".join(errs)
+
+
+@pytest.mark.parametrize("name", all_oracle_names())
+def test_oracle_parity(name, spark, oracle_con):
+    spark_df = registry.QUERIES[name](spark, SF_CORRECTNESS)
+    _assert_matches_oracle(name, spark_df, oracle_con)
+
+
+@pytest.mark.parametrize("name", all_oracle_names())
+def test_oracle_parity_at_scale_pins(name, spark, oracle_con, monkeypatch):
+    """The at-scale arm of the scale-adaptive pin must match DuckDB
+    too: with the ``is_heavy`` threshold patched to 0, every
+    ``is_heavy`` call takes the pinned branch that only 100x-class
+    corpora reach otherwise. The covered entries are found by
+    recording ``is_heavy`` calls during the build, so an entry that
+    starts using it is covered automatically; entries whose build
+    never reaches it are skipped."""
+    from trading212_etl_spark import partitioning
+
+    calls = []
+    real = partitioning.is_heavy
+
+    def recording(df):
+        calls.append(df)
+        return real(df)
+
+    monkeypatch.setattr(partitioning, "_FREEZE_AUTO_BYTES", 0)
+    monkeypatch.setattr(partitioning, "is_heavy", recording)
+    spark_df = registry.QUERIES[name](spark, SF_CORRECTNESS)
+    if not calls:
+        pytest.skip("build does not reach partitioning.is_heavy")
+    _assert_matches_oracle(name, spark_df, oracle_con)
 
 
 def test_every_query_runs_rows_only(spark):

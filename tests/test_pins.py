@@ -1,5 +1,5 @@
-"""Pin lifecycle: the lazy persists taken by freeze_partitions /
-materialize(mode=persist) must be releasable — a long-lived session
+"""Pin lifecycle: the lazy persists taken by freeze_partitions must
+be releasable — a long-lived session
 composing many operators must not accumulate CacheManager entries
 (VERDICT r5 item 5: every cached entry taxes every later query's
 canonicalized-plan lookup, ~1.3-1.5x at ~100 pins)."""
@@ -58,33 +58,28 @@ def test_pinned_scope_releases_only_inner_pins(spark):
     assert _cache_empty(spark)
 
 
-def test_freeze_when_heavy_is_scale_adaptive(spark):
+def test_freeze_when_heavy_is_scale_adaptive(spark, monkeypatch):
     """The r14 adaptive pin: below the Catalyst-size threshold the
     frame passes through UNPINNED (idle cores hide multi-consumer
     duplication at bench SF; the pin would only add cache overhead),
-    above it — forced here via the conf override — it pins exactly
-    like freeze_partitions. The threshold must come from
-    spark.trading212.freeze.auto_bytes so deployments can tune it."""
+    above it — forced here by patching the threshold — it pins exactly
+    like freeze_partitions."""
+    from trading212_etl_spark import partitioning
+
     spark.catalog.clearCache()
     release_pins()
     tiny = spark.range(10).repartition(2)
-    conf_key = "spark.trading212.freeze.auto_bytes"
-    old = spark.conf.get(conf_key, None)
     try:
-        spark.conf.unset(conf_key)
         assert not is_heavy(tiny)
         out = freeze_when_heavy(tiny)
         assert not out.storageLevel.useMemory and len(_LIVE_PINS) == 0
-        spark.conf.set(conf_key, "0")  # force the at-scale branch
+        # force the at-scale branch
+        monkeypatch.setattr(partitioning, "_FREEZE_AUTO_BYTES", 0)
         assert is_heavy(tiny)
         pinned = freeze_when_heavy(tiny)
         assert pinned.storageLevel.useMemory and len(_LIVE_PINS) == 1
         pinned.count()
         assert not _cache_empty(spark)
     finally:
-        if old is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, old)
         release_pins(blocking=True)
         assert _cache_empty(spark)

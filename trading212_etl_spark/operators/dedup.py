@@ -285,7 +285,6 @@ def jaccard_pairs(
     n: int = 3,
     id_col: str = "doc_id",
     tokens_col: str | None = None,
-    max_df: int | None = None,
     top_k_per_doc: int | None = None,
     hubs: int | None = None,
 ) -> DataFrame:
@@ -298,14 +297,10 @@ def jaccard_pairs(
     by millions of docs) is the scale hazard; LSH (minhash_lsh_pairs)
     is the production path, with this as its verifier.
 
-    ``max_df`` (opt-in) drops shingles appearing in more than that
-    many documents before the self-join — the direct cure for
-    stop-shingle skew: a shingle in k docs contributes k² join rows,
-    so one boilerplate shingle across 1M docs is a 10¹²-row straggler
-    key. Capped runs under-count |∩| for pairs sharing dropped
-    shingles, so J is a lower bound — pairs already ≥ threshold on
-    rare shingles still surface. Default None keeps exact (oracle)
-    semantics.
+    Exactness class: shingles are joined and intersected as xxhash64
+    longs, so J is exact up to 64-bit hash collisions — two distinct
+    shingles hashing alike (~2^-64 per shingle pair) would inflate
+    |∩|. The string-joining DuckDB oracle is the collision-free twin.
 
     ``top_k_per_doc`` (opt-in) bounds the result to each document's k
     strongest partners (see :func:`_top_k_per_doc`): the full listing
@@ -323,27 +318,16 @@ def jaccard_pairs(
     (identical signatures share every band bucket — the proof in
     tests/test_llm_ops.py; an equal-J<1 clique may miss band
     collisions) and approximate above the hub cap on
-    mixed-similarity buckets. ``max_df`` applies to the exact route
-    only (the hub route's candidate mass is already banding-bounded)
-    and is IGNORED — with a runtime warning — when both are set.
-    Default None keeps the complete pair set — the oracle path.
+    mixed-similarity buckets. Default None keeps the complete pair
+    set — the oracle path.
     """
     if top_k_per_doc is not None:
-        if max_df is not None:
-            import warnings
-
-            warnings.warn(
-                f"max_df={max_df} is ignored when top_k_per_doc bounds "
-                "candidate generation (the hub route is already "
-                "banding-bounded) — unset one lever to silence this",
-                stacklevel=2,
-            )
         common = _candidate_common_counts(
             docs, n, id_col, tokens_col, top_k_per_doc, hubs=hubs
         )
     else:
         _warn_hubs_without_bound(hubs)
-        common = _common_shingle_counts(docs, n, id_col, tokens_col, max_df)
+        common = _common_shingle_counts(docs, n, id_col, tokens_col)
     jac = F.col("n_common") / (F.col("size_a") + F.col("size_b") - F.col("n_common"))
     out = (
         common.withColumn("jaccard", F.round(jac, 4))
@@ -358,8 +342,7 @@ def jaccard_pairs(
 def _warn_hubs_without_bound(hubs: int | None) -> None:
     """``hubs`` only shapes the bounded hub-subgraph candidate route;
     the exact route enumerates every shingle co-occurrence and has no
-    hub cap to widen. Stay loud about the ignored lever, mirroring the
-    max_df-with-top_k warning (ADVICE r13)."""
+    hub cap to widen. Stay loud about the ignored lever (ADVICE r13)."""
     if hubs is not None:
         import warnings
 
@@ -394,7 +377,6 @@ def _common_shingle_counts(
     n: int,
     id_col: str,
     tokens_col: str | None = None,
-    max_df: int | None = None,
 ) -> DataFrame:
     """(doc_a, doc_b, size_a, size_b, n_common) for every pair of
     documents sharing at least one n-gram shingle — the shared
@@ -411,24 +393,6 @@ def _common_shingle_counts(
     exploded = _explode_nonempty(sh, ["id", "set_size"], "shingles", "__s").select(
         "id", "set_size", F.xxhash64("__s").alias("shingle")
     )
-    if max_df is not None:
-        # df via a WINDOW over the exploded frame, not a separate
-        # aggregate + left_semi join: the aggregate subtree re-executes
-        # the whole tokenize/shingle pipeline a third time (the two
-        # self-join sides share one exchange via ReusedExchange, the
-        # aggregate's partial-agg exchange does not match it) —
-        # measured +9% instead of a win at sf0.5_bskew. The window's
-        # (shingle) exchange IS the join's partitioning, so the guard
-        # costs no extra pass (same lesson as minhash_lsh_pairs r5).
-        from pyspark.sql import Window
-
-        exploded = (
-            exploded.withColumn(
-                "__df", F.count(F.lit(1)).over(Window.partitionBy("shingle"))
-            )
-            .filter(F.col("__df") <= max_df)
-            .drop("__df")
-        )
     a, b = exploded.alias("a"), exploded.alias("b")
     return (
         a.join(b, "shingle")
@@ -449,7 +413,6 @@ def containment_pairs(
     n: int = 3,
     id_col: str = "doc_id",
     tokens_col: str | None = None,
-    max_df: int | None = None,
     top_k_per_doc: int | None = None,
     hubs: int | None = None,
 ) -> DataFrame:
@@ -461,7 +424,7 @@ def containment_pairs(
     J ≈ 0.01 but C = 1.0. The Broder resemblance/containment pairing;
     emits both directions plus max_containment for thresholding.
 
-    Same plan shape, shuffle profile, and ``max_df`` skew lever as
+    Same plan shape, shuffle profile and xxhash64 exactness class as
     jaccard_pairs (shared _common_shingle_counts skeleton, including
     the opt-in ``top_k_per_doc`` bound ranked on max_containment —
     which since r12 also routes candidate generation through the
@@ -469,21 +432,12 @@ def containment_pairs(
     ratio differs, so the 100 TB analysis carries over unchanged.
     """
     if top_k_per_doc is not None:
-        if max_df is not None:
-            import warnings
-
-            warnings.warn(
-                f"max_df={max_df} is ignored when top_k_per_doc bounds "
-                "candidate generation (the hub route is already "
-                "banding-bounded) — unset one lever to silence this",
-                stacklevel=2,
-            )
         common = _candidate_common_counts(
             docs, n, id_col, tokens_col, top_k_per_doc, hubs=hubs
         )
     else:
         _warn_hubs_without_bound(hubs)
-        common = _common_shingle_counts(docs, n, id_col, tokens_col, max_df)
+        common = _common_shingle_counts(docs, n, id_col, tokens_col)
     c_ab = F.round(F.col("n_common") / F.col("size_a"), 4)
     c_ba = F.round(F.col("n_common") / F.col("size_b"), 4)
     out = (
@@ -622,7 +576,10 @@ def minhash_lsh_pairs(
       4. verify candidates with exact Jaccard computed per candidate
          pair (array_intersect on the two shingle sets) — the candidate
          subtree is referenced exactly once, so Spark computes
-         signatures and banding a single time.
+         signatures and banding a single time. The sets are intersected
+         as xxhash64 longs, so the verified J is exact up to 64-bit
+         hash collisions: two distinct shingles of one candidate pair
+         hashing alike (~2^-64·|A|·|B|) would inflate |∩|.
 
     ``audit`` (optional, local/test tool): a dict that receives
     ``over_cap_buckets`` / ``max_bucket_size`` via a small count
@@ -770,7 +727,7 @@ def connected_components(
     their own trivial component and never enter the graph).
 
     Two r15 levers on top (guide §2.4 remove shuffles, §1.2 algorithm
-    first; measured in BENCH_SCALING.json ``cc_frontier_r15``):
+    first; measured in commit 59e83fa):
 
     - **one-pass symmetric edges**: the old ``fwd.union(swap(fwd))``
       had TWO plan branches over the un-materialized ``pairs``
@@ -792,17 +749,20 @@ def connected_components(
       an empty frontier is exactly the old fixpoint. The frontier
       after round 1 is typically a tiny fraction of the graph
       (measured at 125×: 68 500 nodes → 495 → 2 → 0), and a small
-      frontier broadcast (rows-thresholded, conf
-      ``spark.trading212.cc.broadcast_rows``) turns the per-round
-      full-edge shuffle join into a broadcast probe over the
-      checkpointed edges — no fact-sized exchange after round 1.
-      Convergence is a count over the just-checkpointed rows (the
-      same join-free check as before, now also feeding the broadcast
-      decision).
+      frontier broadcast turns the per-round full-edge shuffle join
+      into a broadcast probe over the checkpointed edges — no
+      fact-sized exchange after round 1. The frontier is broadcast
+      when its row count × the schema's per-row ``defaultSize`` fits
+      Spark's own ``spark.sql.autoBroadcastJoinThreshold`` (−1
+      disables); ``defaultSize`` is exact for integer ids and a
+      20-byte guess for string ids. Convergence is a count over the
+      just-checkpointed rows (the same join-free check as before, now
+      also feeding the broadcast decision).
     """
-    spark = pairs.sparkSession
-    bcast_rows = int(
-        spark.conf.get("spark.trading212.cc.broadcast_rows", "1000000")
+    bcast_bytes = (
+        pairs.sparkSession._jsparkSession.sessionState()
+        .conf()
+        .autoBroadcastJoinThreshold()
     )
     edges = materialize(
         pairs.select(
@@ -829,11 +789,14 @@ def connected_components(
     # Seeded init IS round 1's answer, so its frontier is every node
     # whose label differs from its id — a cheap scan of the checkpoint.
     delta = labels.select("node", "label").filter(F.col("node") != F.col("label"))
+    row_bytes = delta._jdf.schema().defaultSize()
     n_delta = delta.count()
     for _ in range(max_iter):
         if n_delta == 0:
             break
-        dside = F.broadcast(delta) if n_delta <= bcast_rows else delta
+        # n_delta > 0 here, so a -1 threshold never broadcasts
+        small = n_delta * row_bytes <= bcast_bytes
+        dside = F.broadcast(delta) if small else delta
         neigh = (
             edges.join(dside, edges.dst == dside.node)
             .groupBy("src")

@@ -5,8 +5,8 @@ runs to weight domains before sampling).
 No analog in the reference (its only iteration is a polling sleep,
 trading212.py:95-100); this extends the engine the same way
 connected-components (dedup.py) does — the graph lives in DataFrames,
-each round is a join + aggregate, and lineage is cut by the pluggable
-materialization policy rather than driver-side collects.
+each round is a join + aggregate, and lineage is cut by
+``partitioning.materialize`` rather than driver-side collects.
 
 Cross-engine exactness policy (shared with textual.py): all rank
 arithmetic is integer micro-units (rank ~ 1e6 == 1.0). Per-edge
@@ -47,9 +47,9 @@ def pagerank_micro(
     |V|-sized (domains, not documents) and joins onto the edge list
     broadcast when it fits, hash otherwise. ``iterations`` is a small
     constant (rank stabilizes in ~10 rounds at damping 0.85), and the
-    rank lineage is cut per round by the conf-driven materialization
-    policy (same lever as connected components) so the plan doesn't
-    deepen geometrically.
+    rank lineage is cut periodically by ``materialize`` (same lever
+    as connected components) so the plan doesn't deepen
+    geometrically.
     """
     # Pin the edge list FIRST: four derivations read it (out-weights,
     # both node-set halves, the annotated send list), and without the

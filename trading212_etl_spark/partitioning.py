@@ -28,7 +28,7 @@ def fan_out(df: DataFrame, multiplier: int = 1) -> DataFrame:
     The round-robin repartition shuffle moves each row once — trivially
     amortized when downstream does regex/hash/codec work per row.
 
-    Conf-driven, not plan-driven: the previous width check
+    Deployment-driven, not plan-driven: the previous width check
     (``df.rdd.getNumPartitions() >= target``) forced a full
     physical-plan translation on the driver on EVERY call — pure
     driver-side overhead for the many operators that wrap their input
@@ -36,80 +36,48 @@ def fan_out(df: DataFrame, multiplier: int = 1) -> DataFrame:
     DEPLOYMENT, not of one plan: under-split inputs happen in
     local/bench mode (one small parquet file = one split), while on a
     real cluster a 100 TB scan is already thousands of
-    ``maxPartitionBytes`` splits wide. So the switch is a session conf:
-    ``spark.trading212.fanout.enabled=false`` (set it in the cluster
-    session) makes every call a zero-cost no-op; the default (local)
-    widens unconditionally.
+    ``maxPartitionBytes`` splits wide. So the switch is the master
+    URL: a ``local[...]`` master widens unconditionally, any cluster
+    master makes every call a zero-cost no-op.
     """
     spark = df.sparkSession
-    if spark.conf.get("spark.trading212.fanout.enabled", "true") == "false":
+    if not spark.sparkContext.master.startswith("local"):
         return df
     target = spark.sparkContext.defaultParallelism * multiplier
     return df.repartition(target)
 
 
-def materialize(df: DataFrame, *, truncate: bool = True) -> DataFrame:
-    """Conf-driven materialization policy for multi-consumer and
-    iterative plan nodes — the deployment lever behind every
-    ``localCheckpoint`` in this package.
+def materialize(df: DataFrame) -> DataFrame:
+    """Eager, lineage-truncating materialization for multi-consumer
+    and iterative plan nodes (connected_components' round-N plan would
+    otherwise embed rounds 1..N-1).
 
-    ``localCheckpoint`` is the right *local* call: eager, truncates
-    lineage, stores blocks on the executors. But it pins executor
-    memory/disk and dies with an executor, so a 1000-executor 100 TB
-    job wants a different strategy without touching operator code.
-    ``spark.trading212.materialize`` selects it:
-
-    - ``local`` (default) — ``localCheckpoint()``: eager + truncating,
-      executor-resident; the bench/local mode.
-    - ``reliable`` — ``checkpoint()``: eager + truncating, written to
-      the fault-tolerant ``sparkContext.setCheckpointDir`` location
-      (HDFS/S3); survives executor loss. The 100 TB setting.
-    - ``persist`` — ``persist(DISK_ONLY)``: lazy, avoids recomputation
-      across consumers but does NOT truncate lineage.
-    - ``none`` — pass-through (recompute per consumer).
-
-    ``truncate=True`` marks call sites that *require* lineage cutting
-    (iterative fixpoints like connected_components, whose round-N plan
-    would otherwise embed rounds 1..N-1): there, non-truncating modes
-    (``persist``/``none``) are upgraded to the truncating equivalent
-    (``reliable`` if a checkpoint dir is configured, else ``local``)
-    rather than silently producing the plan-blowup the checkpoint
-    exists to prevent.
+    The strategy follows the deployment, not a knob: when the session
+    has a checkpoint directory (``sparkContext.setCheckpointDir`` or
+    ``spark.checkpoint.dir`` — a fault-tolerant HDFS/S3 path on a
+    cluster) it is ``checkpoint()``, which survives executor loss;
+    otherwise ``localCheckpoint()``, which stores blocks on the
+    executors — the right call for local/bench mode, where there is
+    no executor to lose.
     """
-    spark = df.sparkSession
-    mode = spark.conf.get("spark.trading212.materialize", "local")
-    if mode in ("persist", "none") and truncate:
-        has_dir = spark.sparkContext.getCheckpointDir() is not None
-        mode = "reliable" if has_dir else "local"
-    if mode == "reliable":
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
         return df.checkpoint()
-    if mode == "persist":
-        from pyspark import StorageLevel
-
-        return _track_pin(df.persist(StorageLevel.DISK_ONLY))
-    if mode == "none":
-        return df
     return df.localCheckpoint()
 
 
 # -- pin lifecycle ----------------------------------------------------------
-# Every lazy persist the package takes (freeze_partitions, materialize's
-# `persist` mode) is recorded here so a long-lived session can RELEASE
-# it: without a release hook, each registry invocation leaves
-# MEMORY_AND_DISK blocks in the CacheManager forever, and the
-# CacheManager's canonicalized-plan lookup runs against every cached
-# entry on every query (~1.3-1.5x tax on untouched queries at ~100
-# accumulated pins, r5 measured) — the r5 verdict's blocker for calling
-# the policy cluster-ready. Eager localCheckpoint/checkpoint blocks are
-# NOT tracked: they live outside the CacheManager and are reclaimed by
-# the ContextCleaner when their RDD is garbage-collected.
+# Every lazy persist the package takes (freeze_partitions) is recorded
+# here so a long-lived session can RELEASE it: without a release hook,
+# each registry invocation leaves MEMORY_AND_DISK blocks in the
+# CacheManager forever, and the CacheManager's canonicalized-plan
+# lookup runs against every cached entry on every query (~1.3-1.5x
+# tax on untouched queries at ~100 accumulated pins, r5 measured) —
+# the r5 verdict's blocker for calling the policy cluster-ready. Eager
+# localCheckpoint/checkpoint blocks are NOT tracked: they live outside
+# the CacheManager and are reclaimed by the ContextCleaner when their
+# RDD is garbage-collected.
 
 _LIVE_PINS: list[DataFrame] = []
-
-
-def _track_pin(df: DataFrame) -> DataFrame:
-    _LIVE_PINS.append(df)
-    return df
 
 
 def release_pins(blocking: bool = False) -> int:
@@ -243,18 +211,18 @@ def freeze_partitions(df: DataFrame) -> DataFrame:
       exactly the same shuffle rows — ``spark_partition_id`` is the
       partition INDEX and cannot drift.
 
-    ``spark.trading212.materialize=reliable`` still upgrades to a
-    fault-tolerant ``checkpoint()`` for the 100 TB deployment (an
-    executor-loss recompute is then a checkpoint read, free of any
-    shuffle-service dependency); every other mode — including
-    ``none``, which would be UNSAFE here — persists.
+    With a checkpoint directory set (see ``materialize``) it upgrades
+    to a fault-tolerant ``checkpoint()`` instead: an executor-loss
+    recompute is then a checkpoint read, free of any shuffle-service
+    dependency.
     """
-    spark = df.sparkSession
-    if spark.conf.get("spark.trading212.materialize", "local") == "reliable":
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
         return df.checkpoint()
     from pyspark import StorageLevel
 
-    return _track_pin(df.persist(StorageLevel.MEMORY_AND_DISK))
+    pinned = df.persist(StorageLevel.MEMORY_AND_DISK)
+    _LIVE_PINS.append(pinned)
+    return pinned
 
 
 # Catalyst input estimate above which freeze_when_heavy pins. 16 MB
@@ -281,10 +249,7 @@ def freeze_when_heavy(df: DataFrame) -> DataFrame:
     always at 100 TB — every duplicated pass is paid in full, and the
     pin wins. The decision input is the Catalyst ``sizeInBytes``
     estimate (derived from leaf file sizes — deterministic per
-    corpus), so the same code self-tunes from laptop to cluster;
-    ``spark.trading212.freeze.auto_bytes`` overrides the threshold
-    (set 0 to force pinning, e.g. for plan dumps of the at-scale
-    shape).
+    corpus), so the same code self-tunes from laptop to cluster.
     """
     return freeze_partitions(df) if is_heavy(df) else df
 
@@ -294,19 +259,13 @@ def is_heavy(df: DataFrame) -> bool:
     ``freeze_when_heavy`` threshold — exposed for operators that
     switch between a light shape and a pinned at-scale shape (DSIR)
     rather than merely toggling one pin."""
-    spark = df.sparkSession
-    thr = int(
-        spark.conf.get(
-            "spark.trading212.freeze.auto_bytes", str(_FREEZE_AUTO_BYTES)
-        )
-    )
     try:
         size = int(
             str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
         )
     except Exception:  # noqa: BLE001 — no estimate: assume heavy (scale-safe)
-        size = thr
-    return size >= thr
+        return True
+    return size >= _FREEZE_AUTO_BYTES
 
 
 def with_salt(df: DataFrame, n_buckets: int, col_name: str = "__salt") -> DataFrame:
@@ -445,9 +404,7 @@ def ordered_prefix(
     # freeze_partitions is the LAZY pin: one cached exchange feeds
     # both consumers, so pids cannot diverge, and no eager checkpoint
     # job runs per call (the r4 bench cost of the sort rewrites was
-    # exactly three such jobs chained in orders_rfm_segments);
-    # spark.trading212.materialize=reliable still upgrades it to a
-    # fault-tolerant checkpoint for the 100 TB deployment.
+    # exactly three such jobs chained in orders_rfm_segments).
     ranged = freeze_partitions(
         df.repartitionByRange(n_parts, *order_by).withColumn(
             "__pid", F.spark_partition_id()

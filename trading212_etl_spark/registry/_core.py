@@ -86,19 +86,9 @@ def scaled_shuffle_partitions(spark: SparkSession, sf_dir: str) -> int:
     there — AQE coalesces them for batch plans, but streaming queries
     run with AQE off and pay every task per stage); the bytes term
     grows partitions once a corpus outruns what ``floor`` partitions
-    can hold in executor memory. ``SPARK_GRAFT_SHUFFLE_TARGET_BYTES``
-    overrides the per-partition target (0 disables scaling)."""
-    import os
-
-    target = int(
-        os.environ.get(
-            "SPARK_GRAFT_SHUFFLE_TARGET_BYTES", str(_SHUFFLE_TARGET_BYTES)
-        )
-    )
+    can hold in executor memory."""
     floor = max(_SHUFFLE_FLOOR, spark.sparkContext.defaultParallelism)
-    if target <= 0:
-        return floor
-    scaled = -(-_corpus_bytes(sf_dir) // target)
+    scaled = -(-_corpus_bytes(sf_dir) // _SHUFFLE_TARGET_BYTES)
     return max(floor, min(_SHUFFLE_CAP, scaled))
 
 
@@ -109,7 +99,7 @@ def register(name: str, oracle: str | None = None):
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
             # Release the lazy persists pinned by PREVIOUS registry
-            # invocations (freeze_partitions / materialize=persist):
+            # invocations (freeze_partitions):
             # registry consumers run build->action->build->action
             # serially (driver, bench, tests), so pins from the prior
             # query are dead weight by the time the next one is built —

@@ -557,7 +557,7 @@ def q_graph_pagerank(spark, sf_dir):
     customer -> supplier trade graph (edge weight = lineitems shipped),
     in exact integer micro-units so the unrolled SQL oracle matches
     bit-for-bit (operators/graph.py:pagerank_micro — per-round single
-    shuffle, |V|-sized rank frame, conf-driven lineage cuts). Node ids
+    shuffle, |V|-sized rank frame, periodic lineage cuts). Node ids
     stay BIGINT (customers positive, suppliers negated) — integer keys
     shuffle and join at a fraction of the cost of string-concatenated
     ids, the kind of key-encoding choice that compounds at 100 TB.
@@ -1227,6 +1227,15 @@ def q_streaming_cdc_apply(spark, sf_dir):
     )
 
 
+# Largest basket orders_basket_affinity expands in one row. A basket of
+# n parts builds all C(n, 2) pair structs inside a single row before the
+# explode, so the row buffer is quadratic in basket size: 1000 parts is
+# ~500k two-long structs (roughly 16 MB in one row), while the corpus
+# tops out at 13 parts per order. A larger basket raises instead of
+# OOMing a task.
+_BASKET_MAX_PARTS = 1000
+
+
 @register(
     "orders_basket_affinity",
     oracle="""
@@ -1265,8 +1274,9 @@ def q_orders_basket_affinity(spark, sf_dir):
     old items distinct), and the ordered pairs explode from a
     slice/transform expression in pure codegen. The quadratic blowup
     stays bounded by basket size (≤ C(13,2) pairs per order in this
-    corpus), and the old co-partitioned self-join — plus its distinct
-    exchange and both SMJ sorts — disappears: per-item frequencies
+    corpus; a basket over ``_BASKET_MAX_PARTS`` fails loudly), and the
+    old co-partitioned self-join — plus its distinct exchange and both
+    SMJ sorts — disappears: per-item frequencies
     explode off the same basket frame (identical rows to the items
     groupBy) and the order count is a plain count of baskets (one row
     per order by construction). Measured at 125×
@@ -1296,13 +1306,23 @@ def q_orders_basket_affinity(spark, sf_dir):
     freq = baskets.select(F.explode("parts").alias("l_partkey")).groupBy(
         "l_partkey"
     ).agg(F.count(F.lit(1)).alias("n_f"))
+    oversized = F.raise_error(
+        F.format_string(
+            "orders_basket_affinity: order %d has %d parts, over the "
+            f"{_BASKET_MAX_PARTS}-part basket cap",
+            "l_orderkey",
+            F.size("parts"),
+        )
+    )
     pairs = (
         baskets.select(
             F.explode(
-                F.expr(
-                    "flatten(transform(parts, (x, i) ->"
-                    " transform(slice(parts, i + 2, size(parts)),"
-                    " y -> struct(x AS part_a, y AS part_b))))"
+                F.when(F.size("parts") > _BASKET_MAX_PARTS, oversized).otherwise(
+                    F.expr(
+                        "flatten(transform(parts, (x, i) ->"
+                        " transform(slice(parts, i + 2, size(parts)),"
+                        " y -> struct(x AS part_a, y AS part_b))))"
+                    )
                 )
             ).alias("p")
         )
