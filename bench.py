@@ -215,7 +215,13 @@ def main() -> None:
     # Warm-up: run every headline query once at a SMALLER SF so the
     # timed loop measures steady-state query execution, not one-off
     # JVM/codegen compilation and parquet-footer caching (measured ~2x
-    # inflation on first execution of codegen-heavy plans). sf0.001 is
+    # inflation on first execution of codegen-heavy plans). This holds
+    # only because get_session sizes the generated-class cache to the
+    # whole registry (spark.sql.codegen.cache.maxEntries=4096): under
+    # Spark's default 100-entry LRU the 137 headline queries evicted
+    # each other's classes long before the timed pass reached them, so
+    # every timed query recompiled its classes and the JIT started
+    # them over from interpreted bytecode. sf0.001 is
     # too small to matter: HotSpot only JIT-compiles the generated
     # operator code after ~10k invocations, so a 500-row warm-up left
     # the first timed run of every shuffle-heavy query executing

@@ -96,11 +96,18 @@ def _synth_parts(docs: DataFrame) -> int:
     """Partition count for the fixture-synthesis kernels: the input is
     a bare doc_id column (KB-sized shuffle) but the KERNEL is
     CPU-bound Python (md5 keystream + container encode), so spreading
-    it over reused Python workers pays immediately — measured at
+    it over reused Python workers pays in WALL time — measured at
     sf0.1: AVI synthesis 1.20→0.80 s and WAV 1.15→0.45 s at 8
     partitions (16 was already worse: per-task overhead outruns the
-    win at this size). defaultParallelism/4 keeps the same scaling law
-    on a cluster; production pipelines read real binaries off object
+    win at this size). It does not pay in CPU: every Python task costs
+    a fixed ~0.25 s of worker CPU whatever its data (PySpark's
+    worker_util.setup_spark_files calls importlib.invalidate_caches(),
+    which re-reads pyspark.zip's directory; an identity mapInPandas
+    over 8 partitions burns ~2 s of worker CPU on 4 cores), while the
+    BMP synth+decode kernels cost ~0.06 ms per doc. Below ~4k docs
+    per task (~30k docs at 8 partitions; sf0.1 has 5k) the fixed cost
+    dominates. defaultParallelism/4 keeps the same scaling law on a
+    cluster; production pipelines read real binaries off object
     storage and inherit the scan's own splits instead."""
     return max(8, docs.sparkSession.sparkContext.defaultParallelism // 4)
 
